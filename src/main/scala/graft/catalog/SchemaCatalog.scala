@@ -149,38 +149,35 @@ class SchemaCatalog(piiTables: Set[String] = Set.empty) {
   /** Serialize the whole catalog (reference dumps the tracker DB schema to
     * the mysql_dumps state table; we emit one JSON blob). */
   def snapshotJson: String = synchronized {
-    def esc(s: String) = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    val rows = entries.toSeq.sortBy(e => (e._1.cluster, e._1.database, e._1.table)).map {
-      case (id, ts) =>
-        s"""{"cluster":"${esc(id.cluster)}","database":"${esc(id.database)}",""" +
-          s""""table":"${esc(id.table)}","schemaId":${ts.schemaId},""" +
-          s""""pii":${ts.containsPii},""" +
-          s""""pkeys":[${ts.pkeys.map(k => "\"" + esc(k) + "\"").mkString(",")}],""" +
-          s""""struct":${ts.struct.json}}"""
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    def ident(id: TableId): List[JField] = List("cluster" -> JString(id.cluster),
+      "database" -> JString(id.database), "table" -> JString(id.table))
+    val rows = entries.toList.sortBy(e => (e._1.cluster, e._1.database, e._1.table)).map {
+      case (id, ts) => JObject(ident(id) ++ List(
+        "schemaId" -> JInt(ts.schemaId),
+        "pii" -> JBool(ts.containsPii),
+        "pkeys" -> JArray(ts.pkeys.toList.map(JString(_))),
+        "struct" -> JsonMethods.parse(ts.struct.json)))
     }
     // the FULL (table, fingerprint) → schema_id history, not just the
     // latest entry per table: re-registering a previously seen schema
     // after recovery must return its original id (registration
     // idempotence across restarts)
-    val fps = byFingerprint.toSeq
+    val fps = byFingerprint.toList
       .sortBy { case ((id, fp), _) => (id.cluster, id.database, id.table, fp) }
       .map { case ((id, fp), sid) =>
-        s"""{"cluster":"${esc(id.cluster)}","database":"${esc(id.database)}",""" +
-          s""""table":"${esc(id.table)}","fp":"${esc(fp)}","schemaId":$sid}"""
+        JObject(ident(id) ++ List("fp" -> JString(fp), "schemaId" -> JInt(sid)))
       }
-    val alters = alterHistory.map { case (id, ev) =>
-      s"""{"cluster":"${esc(id.cluster)}","database":"${esc(id.database)}",""" +
-        s""""table":"${esc(id.table)}","eventId":$ev}"""
+    val alters = alterHistory.toList.map { case (id, ev) =>
+      JObject(ident(id) :+ ("eventId" -> JLong(ev)))
     }
-    s"""{"version":$versionCounter,"nextId":$nextId,""" +
-      s""""entries":[${rows.mkString(",")}],"fingerprints":[${fps.mkString(",")}],""" +
-      s""""alters":[${alters.mkString(",")}]}"""
+    JsonMethods.compact(JObject(
+      "version" -> JInt(versionCounter),
+      "nextId" -> JInt(nextId),
+      "entries" -> JArray(rows),
+      "fingerprints" -> JArray(fps),
+      "alters" -> JArray(alters)))
   }
 
   /** Restore from [[snapshotJson]] output (recovery path T30). */

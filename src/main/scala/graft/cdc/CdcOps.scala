@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -95,6 +95,24 @@ object CdcOps {
     .withColumn("time_of_day_us", col("ts_us") % 86400000000L)
     .withColumn("tags_sorted", array_join(array_sort(split(expr(TAGS_CASE), ",")), ","))
 
+  /** The sortable position key `<log_file>:<log_pos>:<row_idx>` over a
+    * frame's `log_file`, `log_pos` and `row_idx` columns — the one
+    * definition the replay envelope, the Debezium wire path and the wire
+    * rehearsal share. Its LEXICOGRAPHIC order must equal event order: it
+    * keys max_by materialization, per-topic sink ordering, and resume
+    * comparisons. log_pos pads to 10 digits (MySQL positions are uint32,
+    * max 4294967295 — and Spark's lpad TRUNCATES overlong input, so an
+    * insufficient width would silently corrupt the order); row_idx pads
+    * to 4. Unlike log_pos, row_idx has NO protocol bound (rows per event
+    * follow binlog_row_event_max_size), so overflow raises instead of
+    * silently reordering the stream. */
+  val posKey: Column = concat_ws(":", col("log_file"),
+    lpad(col("log_pos").cast("string"), 10, "0"),
+    when(col("row_idx") > 9999, raise_error(concat(
+        lit("pos_key row_idx overflow (>9999), total order would corrupt: "),
+        col("row_idx").cast("string"))).cast("string"))
+      .otherwise(lpad(col("row_idx").cast("string"), 4, "0"))).as("pos_key")
+
   /** T12/T14/T26 — final envelope: metadata, transaction id, topic, and a
     * sortable position key `(log_file, log_pos, offset)` (reference
     * util/message_builder.py:51-78, util/transaction_id.py:22-68). */
@@ -111,20 +129,7 @@ object CdcOps {
     col("prev_id"), col("prev_value"), col("prev_k"),
     concat_ws(":", lit(CLUSTER), col("log_file"), col("log_pos")).as("transaction_id"),
     concat(col("database_name"), lit("."), col("target_table")).as("topic"),
-    // pos_key's LEXICOGRAPHIC order must equal event order — it keys
-    // max_by materialization, per-topic sink ordering, and resume
-    // comparisons. log_pos pads to 10 digits (MySQL positions are
-    // uint32, max 4294967295 — and Spark's lpad TRUNCATES overlong
-    // input, so an insufficient width would silently corrupt the
-    // order); row_idx pads to 4. Unlike log_pos, row_idx has NO
-    // protocol bound (rows per event follow binlog_row_event_max_size),
-    // so overflow raises instead of silently reordering the stream.
-    concat_ws(":", col("log_file"),
-      lpad(col("log_pos").cast("string"), 10, "0"),
-      when(col("row_idx") > 9999, raise_error(concat(
-          lit("pos_key row_idx overflow (>9999), total order would corrupt: "),
-          col("row_idx").cast("string"))).cast("string"))
-        .otherwise(lpad(col("row_idx").cast("string"), 4, "0"))).as("pos_key"),
+    posKey,
     col("event_id"), col("row_idx"), col("k"))
 
   /** T11b-e — the MySQL type-matrix fidelity stage (reference

@@ -52,11 +52,14 @@ object SharedFrames {
     val t0 = System.nanoTime()
     val r = f
     val s = (System.nanoTime() - t0) / 1e9
-    buildLog.put(tag, buildLog.getOrElse(tag, 0.0) + s)
+    // updateWith is atomic on a TrieMap: concurrent builds under one tag
+    // (different inputs or sessions) never lose an increment
+    buildLog.updateWith(tag)(prev => Some(prev.getOrElse(0.0) + s))
     r
   }
 
-  /** Snapshot of per-tag build seconds (only tags whose compute ran). */
+  /** Snapshot of per-tag build seconds (only tags whose compute ran since
+    * the last [[clear]]). */
   def buildSeconds: Map[String, Double] = buildLog.toMap
 
   /** `localCheckpoint` PRESERVES attribute ids, so two callers of the same
@@ -193,5 +196,6 @@ object SharedFrames {
     }
     cache.clear()
     valueCache.clear()
+    buildLog.clear()
   }
 }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
+import org.json4s._
+import org.json4s.jackson.JsonMethods
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** The streaming shape of the engine (SURVEY §3.1):
@@ -21,24 +23,31 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *            → broadcast join against the catalog registry (T16-T18)
   *            → envelope (T9-T15), repartition by topic + sort by pos_key
   *              (strict per-topic order — SURVEY §7.4 risk 3)
-  *            → append parquet sink (T26)
+  *            → staged-rename publish of batch=<id> (T26)
   *       state mirror: lastBatchId + catalog snapshot + per-topic offsets,
   *       written atomically (T25/T27); batch replays are skipped by
   *       batchId comparison — the reference's offset-dedupe (T31).
   *     }
   * }}}
   *
+  * Both ingress paths ([[start]] replay and [[startWire]] Debezium) feed
+  * ONE batch committer ([[runCommitted]]): state load and catalog
+  * restore, the batchId skip, micro-batch persist, the staged-rename
+  * publish, position merge and state save live there once.
+  *
   * Exactly-once: Spark's checkpoint replays an uncommitted batch after a
   * crash. Two mechanisms make the replayed side effects idempotent:
   * committed batches are skipped by the state mirror's batchId check
   * (reference offset-dedupe, components/recovery_handler.py:160-168), and
-  * an UNcommitted batch (crash after the sink write, before saveState)
-  * re-OVERWRITES its own `batch=<id>` output directory rather than
-  * appending — so the parquet sink never holds duplicate rows. Catalog
+  * an UNcommitted batch (crash before saveState) republishes its own
+  * `batch=<id>` directory: the frames are written into a hidden staging
+  * directory and ONE rename publishes them, after clearing whatever a
+  * crashed attempt left in either place — so a reader never sees a
+  * partial batch and the parquet sink never holds duplicate rows. Catalog
   * replay is idempotent too: the in-memory catalog dies with the crash,
   * the restart restores the pre-batch snapshot, and fingerprint-keyed
-  * registration re-mints the same schema ids (proved by the mid-DDL crash
-  * test, mirroring reference failure_recovery_test.py:493+).
+  * registration re-mints the same schema ids (proved by the crash matrix
+  * in CdcPipelineSpec, mirroring reference failure_recovery_test.py:493+).
   */
 object CdcPipeline {
 
@@ -89,8 +98,6 @@ object CdcPipeline {
     val f = stateFile(stateDir)
     if (!Files.exists(f)) None
     else {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
       implicit val fmt: Formats = DefaultFormats
       val root = JsonMethods.parse(Files.readString(f))
       val pos = (root \ "position") match {
@@ -104,15 +111,16 @@ object CdcPipeline {
     }
   }
 
-  private def saveState(stateDir: String, batchId: Long, cat: SchemaCatalog,
-      clean: Boolean, position: Map[String, String]): Unit = {
+  /** Write `state.json` atomically (temp file + atomic move), with the
+    * keys [[loadState]] reads. */
+  private def saveState(stateDir: String, s: State): Unit = {
     Files.createDirectories(Paths.get(stateDir))
-    val tmp = Paths.get(stateDir, s".state.json.tmp")
-    val posJson = position.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")
-    Files.writeString(tmp,
-      s"""{"lastBatchId":$batchId,"cleanShutdown":$clean,""" +
-        s""""position":$posJson,"catalog":${cat.snapshotJson}}""")
+    val tmp = Paths.get(stateDir, ".state.json.tmp")
+    Files.writeString(tmp, JsonMethods.compact(JObject(
+      "lastBatchId" -> JLong(s.lastBatchId),
+      "cleanShutdown" -> JBool(s.cleanShutdown),
+      "position" -> JObject(s.position.toList.sorted.map { case (k, v) => k -> JString(v) }),
+      "catalog" -> JsonMethods.parse(s.catalogJson))))
     Files.move(tmp, stateFile(stateDir), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
@@ -120,15 +128,8 @@ object CdcPipeline {
   /** T34 — rewrite the state file with the clean-shutdown flag set
     * (reference saves GlobalEventState with is_clean_shutdown=True on
     * graceful stop; base_parse_replication_stream.py:233-267). */
-  private def markCleanShutdown(stateDir: String): Unit = {
-    val f = stateFile(stateDir)
-    if (Files.exists(f)) {
-      val txt = Files.readString(f)
-      val tmp = Paths.get(stateDir, ".state.json.tmp")
-      Files.writeString(tmp, txt.replaceFirst("\"cleanShutdown\":false", "\"cleanShutdown\":true"))
-      Files.move(tmp, f, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
+  private def markCleanShutdown(stateDir: String): Unit =
+    loadState(stateDir).foreach(s => saveState(stateDir, s.copy(cleanShutdown = true)))
 
   /** T35 — single-instance lock with ZK-ephemeral-style stale takeover
     * (the reference holds a ZooKeeper lock for the process lifetime;
@@ -226,12 +227,6 @@ object CdcPipeline {
         * idempotently to `snap=<batchId>`. */
       materializeDir: Option[String] = None): StreamingQuery = {
 
-    val catalog = new SchemaCatalog(piiTables = CdcSqlFragments.PII_TABLES.toSet)
-    val saved = loadState(stateDir)
-    saved.foreach(s => catalog.restore(s.catalogJson)) // T30 recovery
-    var lastCommitted = saved.map(_.lastBatchId).getOrElse(-1L)
-    var lastPosition = saved.map(_.position).getOrElse(Map.empty[String, String])
-
     val stream = spark.readStream
       .schema(replaySchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
@@ -253,7 +248,7 @@ object CdcPipeline {
     val cdcStream = CdcOps.admit(CdcReplay.fromEvents(stream))
       .observe("cdc", observeCols.head, observeCols.tail: _*)
 
-    withStreamLifecycle(spark, stateDir, onProgress = e => {
+    runCommitted(spark, cdcStream, outDir, checkpointDir, stateDir, onProgress = e => {
       val m = e.progress.observedMetrics.get("cdc")
       if (m != null) statsSink(BatchStats(
         e.progress.batchId,
@@ -261,20 +256,82 @@ object CdcPipeline {
         m.getAs[Long]("heartbeats"),
         Option(m.getAs[java.lang.Long]("hb_max_ts_us")).map(_.longValue),
         CdcSqlFragments.WHITELIST.map(t => t -> m.getAs[Long](s"n_$t")).toMap))
-    }) {
-      cdcStream.writeStream
+    }) { (batch, batchId, catalog, publish) =>
+      processBatch(spark, batch, batchId, catalog, outDir, materializeDir, publish)
+    }
+  }
+
+  /** Test injection point of [[runCommitted]]: called with the batch id
+    * and a phase name — `typed` (DDL applied and frames built, before
+    * staging), `staged` (frames staged, before the rename) and
+    * `published` (renamed into place, before the state save). Throwing
+    * here simulates a crash at that point of the commit protocol
+    * (reference failure_recovery_test.py:493+). */
+  private[streaming] var crashHook: (Long, String) => Unit = (_, _) => ()
+
+  /** The one batch committer both ingress paths feed. In order: state
+    * load and catalog restore (T30); per micro-batch, the batchId skip
+    * (T31: a batch at or below the last committed id is a replay after a
+    * restart whose side effects are already committed — offset-dedupe
+    * parity); persist of the micro-batch; the path's own `work`, which
+    * hands its frames to `publish` and returns the batch's position
+    * mirror; then position merge and state save (T25/T27).
+    *
+    * `publish` is the staged-rename sink: it clears whatever a crashed
+    * attempt left in `.batch_<id>.staging` and `batch=<id>`, appends each
+    * frame topic-partitioned and pos_key-sorted (strict per-topic order —
+    * SURVEY §7.4 risk 3, the same constraint Kafka's per-topic-partition
+    * ordering imposes) into the DOT-PREFIXED staging directory (hidden
+    * from Spark/Hadoop file listing), then ONE rename publishes
+    * `batch=<id>` — rename on a local FS / HDFS is the atomic publish
+    * point, so a reader listing batch directories never observes a
+    * partially-written batch. Both paths hand over at least one frame
+    * (the wire path's quarantine slice is always one), and a frame with
+    * no rows still writes its directory, so EVERY committed batch has its
+    * batch=<id> directory; a DDL-only batch publishes an empty one. */
+  private def runCommitted(
+      spark: SparkSession, stream: DataFrame, outDir: String,
+      checkpointDir: String, stateDir: String,
+      onProgress: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent => Unit = _ => ())(
+      work: (DataFrame, Long, SchemaCatalog, Seq[DataFrame] => Unit) => Map[String, String])
+      : StreamingQuery = {
+    val catalog = new SchemaCatalog(piiTables = CdcSqlFragments.PII_TABLES.toSet)
+    val saved = loadState(stateDir)
+    saved.foreach(s => catalog.restore(s.catalogJson))
+    var lastCommitted = saved.map(_.lastBatchId).getOrElse(-1L)
+    var lastPosition = saved.map(_.position).getOrElse(Map.empty[String, String])
+    val fs = new org.apache.hadoop.fs.Path(outDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+    def publish(batchId: Long)(frames: Seq[DataFrame]): Unit = {
+      crashHook(batchId, "typed")
+      val batchDir = new org.apache.hadoop.fs.Path(s"$outDir/batch=$batchId")
+      val stageDir = new org.apache.hadoop.fs.Path(s"$outDir/.batch_$batchId.staging")
+      fs.delete(stageDir, true)
+      fs.delete(batchDir, true)
+      frames.foreach(_.repartition(col("topic"))
+        .sortWithinPartitions("pos_key")
+        .write.mode(SaveMode.Append).parquet(stageDir.toString))
+      crashHook(batchId, "staged")
+      if (!fs.rename(stageDir, batchDir))
+        throw new java.io.IOException(s"sink: failed to publish $stageDir -> $batchDir")
+    }
+
+    withStreamLifecycle(spark, stateDir, onProgress) {
+      stream.writeStream
         .option("checkpointLocation", checkpointDir)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          if (batchId <= lastCommitted) {
-            // T31: replayed batch after restart — side effects already
-            // committed; skip (offset-dedupe parity).
-          } else {
-            val position = processBatch(spark, batch, batchId, catalog, outDir,
-              materializeDir)
-            lastPosition = mergePosition(lastPosition, position)
-            saveState(stateDir, batchId, catalog, clean = false, lastPosition)
-            lastCommitted = batchId
+          if (batchId > lastCommitted) {
+            val cached = batch.persist()
+            try {
+              val position = work(cached, batchId, catalog, publish(batchId))
+              crashHook(batchId, "published")
+              lastPosition = mergePosition(lastPosition, position)
+              saveState(stateDir, State(batchId, catalog.snapshotJson,
+                cleanShutdown = false, lastPosition))
+              lastCommitted = batchId
+            } finally cached.unpersist()
           }
           ()
         }
@@ -282,18 +339,17 @@ object CdcPipeline {
     }
   }
 
-  /** Shared [[start]]/[[startWire]] lifecycle: acquire the instance lock
+  /** The committer's query lifecycle: acquire the instance lock
     * (T35) under a provisional token, install the termination listener
     * (T34 clean-shutdown flag + lock release + progress fan-out), build
     * the query, then swap the token for the real runId — but ONLY if we
     * still hold the lock (never clobber a token another process placed).
     * The check-then-write swap is safe because the provisional token is
     * registered in heldTokens (same-JVM checkers see it live) and a
-    * cross-process steal requires this pid to be dead. Factored so a
-    * locking-protocol fix can never drift between the two entry points. */
+    * cross-process steal requires this pid to be dead. */
   private def withStreamLifecycle(
       spark: SparkSession, stateDir: String,
-      onProgress: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent => Unit = _ => ())(
+      onProgress: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent => Unit)(
       mk: => StreamingQuery): StreamingQuery = {
     val token = java.util.UUID.randomUUID().toString
     acquireLock(spark, stateDir, token)
@@ -342,18 +398,18 @@ object CdcPipeline {
     * with DDL applied between position segments (the T24 flush-barrier
     * made real inside the batch: a row BEFORE an in-batch ALTER keeps
     * the pre-ALTER column set and version, T22b parity with the replay
-    * path's intervals) — then written per-topic-ordered + idempotent,
-    * exactly like [[processBatch]]'s sink. Debezium delete TOMBSTONES
+    * path's intervals) — then published through the same committer as
+    * [[start]] ([[runCommitted]]). Debezium delete TOMBSTONES
     * (null Kafka value) are dropped by contract; unparseable records are
     * quarantined under `topic=__unparsed`; rows for tables the
     * schema-change topic has not yet created are quarantined under
     * `topic=__unregistered` rather than dropped or guessed (the
     * reference fetches SHOW CREATE on a cache miss — that needs a live
-    * MySQL, so the wire path records instead). State mirror (lastBatchId
-    * + catalog snapshot incl. ALTER positions + binlog position) and the
-    * batchId dedupe give the same crash/restart contract as [[start]];
-    * the catalog restore means a restarted consumer types replayed rows
-    * under the same schema versions (T22b/T30).
+    * MySQL, so the wire path records instead). The committer's state
+    * mirror (lastBatchId + catalog snapshot incl. ALTER positions +
+    * binlog position) and batchId dedupe give the crash/restart contract
+    * of [[start]]; the catalog restore means a restarted consumer types
+    * replayed rows under the same schema versions (T22b/T30).
     *
     * Scale: the per-table loop is control-plane-bounded (#tables in the
     * batch); each table's projection is one narrow codegen'd pass, the
@@ -367,161 +423,106 @@ object CdcPipeline {
       checkpointDir: String,
       stateDir: String,
       maxFilesPerTrigger: Int = 1): StreamingQuery = {
-    val catalog = new SchemaCatalog(piiTables = CdcSqlFragments.PII_TABLES.toSet)
-    val saved = loadState(stateDir)
-    saved.foreach(s => catalog.restore(s.catalogJson)) // T30 recovery
-    var lastCommitted = saved.map(_.lastBatchId).getOrElse(-1L)
-    var lastPosition = saved.map(_.position).getOrElse(Map.empty[String, String])
-
     val stream = spark.readStream
       .schema(wireSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(wireDir)
 
-    val posKeyCol = concat_ws(":", col("log_file"),
-      lpad(col("log_pos").cast("string"), 10, "0"),
-      lpad(col("row_idx").cast("string"), 4, "0")).as("pos_key")
+    runCommitted(spark, stream, outDir, checkpointDir, stateDir) {
+      (cached, _, catalog, publish) =>
+        // ---- schema-change events, collected in binlog order
+        // (control-plane-tiny: one row per DDL statement).
+        val changes = DebeziumAdapter.fromSchemaChange(
+          cached.filter(col("topic") === cluster))
+        val changeRows = changes
+          .select("cluster_name", "database_name", "ddl", "event_id")
+          .collect().sortBy(_.getLong(3))
 
-    withStreamLifecycle(spark, stateDir) {
-      stream.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          if (batchId <= lastCommitted) {
-            // T31: replayed batch after restart — already committed; skip.
-          } else {
-            val cached = batch.persist()
-            try {
-              // ---- schema-change events, collected in binlog order
-              // (control-plane-tiny: one row per DDL statement).
-              val changes = DebeziumAdapter.fromSchemaChange(
-                cached.filter(col("topic") === cluster))
-              val changeRows = changes
-                .select("cluster_name", "database_name", "ddl", "event_id")
-                .collect().sortBy(_.getLong(3))
+        // ---- data events. A null Kafka value is a Debezium delete
+        // TOMBSTONE (compaction hint, no image, no coordinates) —
+        // dropped by contract, the delete event itself already carried
+        // the row. Anything else must parse; records whose payload does
+        // not (null db/table after from_json) are QUARANTINED under
+        // topic=__unparsed rather than crashing the control-plane loop
+        // on unsortable null keys. pos_key is computed here, once per
+        // record into the cache, rather than in every per-table slice.
+        val parsed = DebeziumAdapter.fromDebezium(
+          cached.filter(col("topic") =!= cluster && col("value").isNotNull))
+          .withColumn("pos_key", CdcOps.posKey).persist()
+        try {
+          // a row needs identity AND coordinates to be typed: a null
+          // log_file/log_pos would give a null __pos that every
+          // position-segment filter silently drops
+          val wellFormed = col("database_name").isNotNull &&
+            col("table_name").isNotNull &&
+            col("log_file").isNotNull && col("log_pos").isNotNull
+          val data = parsed
+            .filter(wellFormed)
+            .withColumn("__pos", DebeziumAdapter.packedEventId(
+              col("log_file"), col("log_pos")))
+          // delete carries its image in `before` (Debezium op 'd')
+          val img = when(col("message_type") === "delete",
+            col("before")).otherwise(col("after"))
+          val meta = Seq(col("message_type"), col("log_file"),
+            col("log_pos"), col("row_idx"), col("ts_us"),
+            col("transaction_id"), col("pos_key"))
 
-              // ---- data events. A null Kafka value is a Debezium delete
-              // TOMBSTONE (compaction hint, no image, no coordinates) —
-              // dropped by contract, the delete event itself already
-              // carried the row. Anything else must parse; records whose
-              // payload does not (null db/table after from_json) are
-              // QUARANTINED under topic=__unparsed rather than crashing
-              // the control-plane loop on unsortable null keys.
-              val parsed = DebeziumAdapter.fromDebezium(
-                cached.filter(col("topic") =!= cluster &&
-                  col("value").isNotNull)).persist()
-              try {
-                // a row needs identity AND coordinates to be typed: a
-                // null log_file/log_pos would give a null __pos that
-                // every position-segment filter silently drops
-                val wellFormed = col("database_name").isNotNull &&
-                  col("table_name").isNotNull &&
-                  col("log_file").isNotNull && col("log_pos").isNotNull
-                val data = parsed
-                  .filter(wellFormed)
-                  .withColumn("__pos", DebeziumAdapter.packedEventId(
-                    col("log_file"), col("log_pos")))
-                // delete carries its image in `before` (Debezium op 'd')
-                val img = when(col("message_type") === "delete",
-                  col("before")).otherwise(col("after"))
-                val meta = Seq(col("message_type"), col("log_file"),
-                  col("log_pos"), col("row_idx"), col("ts_us"),
-                  col("transaction_id"), posKeyCol)
+          // one control-plane pass per table present in a slice, typing
+          // the row image by the catalog's CURRENT per-table StructType
+          // (the reference's per-table handler shape)
+          def typedSlices(seg: DataFrame): Seq[((String, String), DataFrame)] =
+            typedSlicesFor(catalog, cluster, seg, img, meta)
 
-                // one control-plane pass per table present in a slice,
-                // typing the row image by the catalog's CURRENT per-table
-                // StructType (the reference's per-table handler shape)
-                def typedSlices(seg: DataFrame): Seq[((String, String), DataFrame)] =
-                  typedSlicesFor(catalog, cluster, seg, img, meta)
-
-                // ---- the T24 flush-barrier made REAL inside the batch:
-                // data rows type under the catalog state at THEIR OWN
-                // binlog position. Rows between consecutive DDL positions
-                // type first, then the DDL applies — so a row BEFORE an
-                // in-batch ALTER keeps the pre-ALTER column set and
-                // version (T22b), exactly like the replay path's
-                // per-position intervals. Segment count is #DDLs + 1
-                // (control-plane-bounded).
-                val outs = Seq.newBuilder[((String, String), DataFrame)]
-                var lower = Long.MinValue
-                changeRows.foreach { ch =>
-                  val at = ch.getLong(3)
-                  outs ++= typedSlices(data.filter(
-                    col("__pos") >= lower && col("__pos") < at))
-                  catalog.applyDdl(ch.getString(0), ch.getString(1),
-                    ch.getString(2), atEventId = at)
-                  lower = at
-                }
-                outs ++= typedSlices(data.filter(col("__pos") >= lower))
-                val quarantine = parsed
-                  .filter(!wellFormed)
-                  .select(Seq(
-                    lit("__unparsed").as("topic"),
-                    lit(-1).as("schema_id"),
-                    lit(false).as("contains_pii"),
-                    lit(0L).as("schema_version"),
-                    to_json(img).as("payload_json")) ++ meta: _*)
-
-                // ---- sharded sink (r8): plan/write per ≤25-table group
-                // instead of one all-tables union — Catalyst re-walking a
-                // single growing union made per-table plan cost 1.58× per
-                // table-count doubling (BENCH_wire r7); narrow per-group
-                // unions keep it flat. The N+1 group appends land in a
-                // DOT-PREFIXED staging dir (hidden from Spark/Hadoop file
-                // listing), then ONE rename publishes batch=<id> — so a
-                // concurrent reader listing batch directories never
-                // observes a partially-written batch (r8 ADVICE: the
-                // explicit delete+N-appends form had widened the
-                // visible-partial window from one write to N+1; rename on
-                // a local FS / HDFS is the atomic publish point). A
-                // replayed/crashed attempt may have left either dir, so
-                // both are cleared first. The quarantine slice writes last
-                // and unconditionally (possibly empty), so EVERY committed
-                // batch has its batch=<id> directory — the same sink
-                // contract as [[processBatch]]; a DDL-only batch writes an
-                // empty one.
-                val batchDir = s"$outDir/batch=$batchId"
-                val stageDir = s"$outDir/.batch_$batchId.staging"
-                val fs = new org.apache.hadoop.fs.Path(outDir)
-                  .getFileSystem(spark.sparkContext.hadoopConfiguration)
-                fs.delete(new org.apache.hadoop.fs.Path(stageDir), true)
-                fs.delete(new org.apache.hadoop.fs.Path(batchDir), true)
-                (groupedUnions(outs.result()) :+ quarantine).foreach { g =>
-                  g.repartition(col("topic"))
-                    .sortWithinPartitions("pos_key")
-                    .write.mode(SaveMode.Append)
-                    .parquet(stageDir)
-                }
-                if (!fs.rename(new org.apache.hadoop.fs.Path(stageDir),
-                    new org.apache.hadoop.fs.Path(batchDir)))
-                  throw new java.io.IOException(
-                    s"wire sink: failed to publish $stageDir -> $batchDir")
-
-                // ---- position mirror: the max binlog coordinate across
-                // data AND schema-change events (a DDL-only batch still
-                // advances the position, as the reference's QueryEvent
-                // handling does).
-                val posRow = data.select("log_file", "log_pos")
-                  .unionByName(changes.select("log_file", "log_pos"))
-                  .agg(max(struct(col("log_file"), col("log_pos"))).as("p"))
-                  .collect()(0)
-                val position =
-                  if (posRow.isNullAt(0)) Map.empty[String, String]
-                  else {
-                    val p = posRow.getStruct(0)
-                    graft.cdc.LogPosition(
-                      logPos = Some(p.getLong(1)), logFile = Some(p.getString(0)),
-                      offset = Some(0)).toDict
-                  }
-                lastPosition = mergePosition(lastPosition, position)
-                saveState(stateDir, batchId, catalog, clean = false, lastPosition)
-                lastCommitted = batchId
-              } finally parsed.unpersist()
-            } finally cached.unpersist()
+          // ---- the T24 flush-barrier made REAL inside the batch: data
+          // rows type under the catalog state at THEIR OWN binlog
+          // position. Rows between consecutive DDL positions type first,
+          // then the DDL applies — so a row BEFORE an in-batch ALTER
+          // keeps the pre-ALTER column set and version (T22b), exactly
+          // like the replay path's per-position intervals. Segment count
+          // is #DDLs + 1 (control-plane-bounded).
+          val outs = Seq.newBuilder[((String, String), DataFrame)]
+          var lower = Long.MinValue
+          changeRows.foreach { ch =>
+            val at = ch.getLong(3)
+            outs ++= typedSlices(data.filter(
+              col("__pos") >= lower && col("__pos") < at))
+            catalog.applyDdl(ch.getString(0), ch.getString(1),
+              ch.getString(2), atEventId = at)
+            lower = at
           }
-          ()
-        }
-        .start()
+          outs ++= typedSlices(data.filter(col("__pos") >= lower))
+          val quarantine = parsed
+            .filter(!wellFormed)
+            .select(Seq(
+              lit("__unparsed").as("topic"),
+              lit(-1).as("schema_id"),
+              lit(false).as("contains_pii"),
+              lit(0L).as("schema_version"),
+              to_json(img).as("payload_json")) ++ meta: _*)
+
+          // ---- sharded sink (r8): publish per ≤25-table group instead
+          // of one all-tables union — Catalyst re-walking a single
+          // growing union made per-table plan cost 1.58× per table-count
+          // doubling (BENCH_wire r7); narrow per-group unions keep it
+          // flat. The quarantine slice is always one of the frames
+          // (possibly empty).
+          publish(groupedUnions(outs.result()) :+ quarantine)
+
+          // ---- position mirror: the max binlog coordinate across data
+          // AND schema-change events (a DDL-only batch still advances
+          // the position, as the reference's QueryEvent handling does).
+          val posRow = data.select("log_file", "log_pos")
+            .unionByName(changes.select("log_file", "log_pos"))
+            .agg(max(struct(col("log_file"), col("log_pos"))).as("p"))
+            .collect()(0)
+          if (posRow.isNullAt(0)) Map.empty[String, String]
+          else {
+            val p = posRow.getStruct(0)
+            graft.cdc.LogPosition(
+              logPos = Some(p.getLong(1)), logFile = Some(p.getString(0)),
+              offset = Some(0)).toDict
+          }
+        } finally parsed.unpersist()
     }
   }
 
@@ -598,12 +599,6 @@ object CdcPipeline {
       .map { case (_, members) => members.map(_._2).reduce(_ unionByName _) }
   }
 
-  /** Test injection point: runs after the DDL branch of a batch has been
-    * applied to the catalog but BEFORE the data write and state save —
-    * throwing here simulates the reference's mid-DDL crash
-    * (failure_recovery_test.py:493+). */
-  private[streaming] var afterDdlHook: Long => Unit = _ => ()
-
   /** Positions only ADVANCE (the reference updates GlobalEventState as it
     * processes, never backwards): keep the larger (log_file, log_pos)
     * coordinate and, independently, the larger heartbeat serial — a batch
@@ -627,101 +622,91 @@ object CdcPipeline {
     * dict): the last (log_file, log_pos) of the batch plus the latest
     * heartbeat beacon — what the reference persists as
     * GlobalEventState.position. */
-  private def processBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
-      catalog: SchemaCatalog, outDir: String,
-      materializeDir: Option[String] = None): Map[String, String] = {
-    val cached = batch.persist()
+  private def processBatch(spark: SparkSession, cached: DataFrame, batchId: Long,
+      catalog: SchemaCatalog, outDir: String, materializeDir: Option[String],
+      publish: Seq[DataFrame] => Unit): Map[String, String] = {
+    // ---- DDL branch (T19 routing; T24 barrier = this runs before the
+    // data branch of the SAME batch, after all prior batches committed).
+    val ddls = cached.filter(col("kind") === "ddl")
+      .withColumn("stmt", expr(CdcSqlFragments.DDL_STMT))
+      .select("event_id", "database_name", "stmt")
+      .collect() // DDL volume is control-plane-tiny by construction
+      .sortBy(_.getLong(0))
+    ddls.foreach { r =>
+      catalog.applyDdl(CdcSqlFragments.CLUSTER, r.getString(1), r.getString(2),
+        atEventId = r.getLong(0))
+    }
+
+    // ---- heartbeat/position branch (T5/T27): one aggregate over the
+    // batch yields the position mirror — the max binlog coordinate and
+    // the latest heartbeat beacon (serial, timestamp).
+    val posRow = cached.agg(
+      max(struct(col("log_file"), col("log_pos"))).as("p"),
+      max(when(col("kind") === "heartbeat",
+        struct(col("event_id"), col("ts_us")))).as("hb"))
+      .collect()(0)
+    // an all-filtered batch (every event dropped by admit) moves no
+    // position: max() over zero rows is null → empty dict, which
+    // mergePosition keeps as the previous coordinate
+    val position =
+      if (posRow.isNullAt(0)) Map.empty[String, String]
+      else {
+        val p = posRow.getStruct(0)
+        val hb = Option(posRow.getStruct(1))
+        graft.cdc.LogPosition(
+          logPos = Some(p.getLong(1)), logFile = Some(p.getString(0)),
+          offset = Some(0), // batch boundaries are whole files
+          hbSerial = hb.map(_.getLong(0)), hbTimestamp = hb.map(_.getLong(1))).toDict
+      }
+
+    // ---- data branch
+    val data = CdcOps.blacklistFilter(CdcOps.retarget(CdcOps.whitelist(
+      CdcOps.dataOnly(cached))))
+
+    // register unseen tables deterministically (sorted), then broadcast
+    val tables = data.select("database_name", "target_table").distinct()
+      .collect().map(r => (r.getString(0), r.getString(1))).sorted
+    tables.foreach { case (db, tbl) =>
+      val id = TableId(CdcSqlFragments.CLUSTER, db, tbl)
+      if (catalog.lookup(id).isEmpty) catalog.register(id, payloadStruct)
+    }
+    val regRows = catalog.all.toSeq.map { case (id, ts) =>
+      (id.database, id.table, ts.schemaId, ts.containsPii)
+    }
+    val reg = spark.createDataFrame(regRows)
+      .toDF("database_name", "target_table", "schema_id", "contains_pii")
+
+    val env0 = CdcOps.envelope(CdcOps.typeTransforms(CdcOps.images(
+      CdcOps.enrich(CdcOps.explodeRows(data), reg))))
+
+    // T22b — the data plane follows the CATALOG's evolved schemas: the
+    // payload-version intervals come from the ALTER positions the
+    // catalog recorded while applying DDL (above and in all prior
+    // batches — they ride the state snapshot through recovery), so an
+    // ALTER changes the payload column set from its binlog position
+    // onward. Interval construction is pure driver-side arithmetic on
+    // control-plane state; the data side takes one broadcast hash join.
+    import spark.implicits._
+    val intervalRows = catalog.alterEvents
+      .groupBy(h => (h._1.database, h._1.table))
+      .toSeq.flatMap { case ((db, tbl), es) =>
+        val at = es.map(_._2).sorted
+        at.zipWithIndex.map { case (from, idx) =>
+          (db, tbl, idx + 2L, from, at.lift(idx + 1)) }
+      }
+    val intervals = intervalRows
+      .toDF("database_name", "base_table", "version", "from_id", "to_id")
+    val env = CdcOps.evolvePayload(env0, intervals)
+
+    // persist when the envelope feeds both sinks — without it the whole
+    // T3-T15 transform chain runs twice per batch
+    if (materializeDir.nonEmpty) env.persist()
     try {
-      // ---- DDL branch (T19 routing; T24 barrier = this runs before the
-      // data branch of the SAME batch, after all prior batches committed).
-      val ddls = cached.filter(col("kind") === "ddl")
-        .withColumn("stmt", expr(CdcSqlFragments.DDL_STMT))
-        .select("event_id", "database_name", "stmt")
-        .collect() // DDL volume is control-plane-tiny by construction
-        .sortBy(_.getLong(0))
-      ddls.foreach { r =>
-        catalog.applyDdl(CdcSqlFragments.CLUSTER, r.getString(1), r.getString(2),
-          atEventId = r.getLong(0))
-      }
-      afterDdlHook(batchId)
-
-      // ---- heartbeat/position branch (T5/T27): one aggregate over the
-      // batch yields the position mirror — the max binlog coordinate and
-      // the latest heartbeat beacon (serial, timestamp).
-      val posRow = cached.agg(
-        max(struct(col("log_file"), col("log_pos"))).as("p"),
-        max(when(col("kind") === "heartbeat",
-          struct(col("event_id"), col("ts_us")))).as("hb"))
-        .collect()(0)
-      // an all-filtered batch (every event dropped by admit) moves no
-      // position: max() over zero rows is null → empty dict, which
-      // mergePosition keeps as the previous coordinate
-      val position =
-        if (posRow.isNullAt(0)) Map.empty[String, String]
-        else {
-          val p = posRow.getStruct(0)
-          val hb = Option(posRow.getStruct(1))
-          graft.cdc.LogPosition(
-            logPos = Some(p.getLong(1)), logFile = Some(p.getString(0)),
-            offset = Some(0), // batch boundaries are whole files
-            hbSerial = hb.map(_.getLong(0)), hbTimestamp = hb.map(_.getLong(1))).toDict
-        }
-
-      // ---- data branch
-      val data = CdcOps.blacklistFilter(CdcOps.retarget(CdcOps.whitelist(
-        CdcOps.dataOnly(cached))))
-
-      // register unseen tables deterministically (sorted), then broadcast
-      val tables = data.select("database_name", "target_table").distinct()
-        .collect().map(r => (r.getString(0), r.getString(1))).sorted
-      tables.foreach { case (db, tbl) =>
-        val id = TableId(CdcSqlFragments.CLUSTER, db, tbl)
-        if (catalog.lookup(id).isEmpty) catalog.register(id, payloadStruct)
-      }
-      val regRows = catalog.all.toSeq.map { case (id, ts) =>
-        (id.database, id.table, ts.schemaId, ts.containsPii)
-      }
-      val reg = spark.createDataFrame(regRows)
-        .toDF("database_name", "target_table", "schema_id", "contains_pii")
-
-      val env0 = CdcOps.envelope(CdcOps.typeTransforms(CdcOps.images(
-        CdcOps.enrich(CdcOps.explodeRows(data), reg))))
-
-      // T22b — the data plane follows the CATALOG's evolved schemas: the
-      // payload-version intervals come from the ALTER positions the
-      // catalog recorded while applying DDL (above and in all prior
-      // batches — they ride the state snapshot through recovery), so an
-      // ALTER changes the payload column set from its binlog position
-      // onward. Interval construction is pure driver-side arithmetic on
-      // control-plane state; the data side takes one broadcast hash join.
-      import spark.implicits._
-      val intervalRows = catalog.alterEvents
-        .groupBy(h => (h._1.database, h._1.table))
-        .toSeq.flatMap { case ((db, tbl), es) =>
-          val at = es.map(_._2).sorted
-          at.zipWithIndex.map { case (from, idx) =>
-            (db, tbl, idx + 2L, from, at.lift(idx + 1)) }
-        }
-      val intervals = intervalRows
-        .toDF("database_name", "base_table", "version", "from_id", "to_id")
-      val env = CdcOps.evolvePayload(env0, intervals)
-
-      // strict per-topic order on publish (single partition per topic —
-      // the same constraint Kafka's per-topic-partition ordering imposes).
-      // Idempotent sink: the batch OVERWRITES its own batch=<id> directory,
-      // so a crash-replay of an uncommitted batch cannot duplicate rows.
-      // persist when the envelope feeds both sinks — without it the whole
-      // T3-T15 transform chain runs twice per batch
-      if (materializeDir.nonEmpty) env.persist()
-      try {
-        env.repartition(col("topic"))
-          .sortWithinPartitions("pos_key")
-          .write.mode(SaveMode.Overwrite).parquet(s"$outDir/batch=$batchId")
-        materializeDir.foreach(dir =>
-          materializeBatch(spark, env, batchId, dir, outDir))
-      } finally if (materializeDir.nonEmpty) env.unpersist()
-      position
-    } finally cached.unpersist()
+      publish(Seq(env))
+      materializeDir.foreach(dir =>
+        materializeBatch(spark, env, batchId, dir, outDir))
+    } finally if (materializeDir.nonEmpty) env.unpersist()
+    position
   }
 
   /** Continuous t13b: merge the previous snapshot with this batch's

@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.Tables
 import graft.catalog.{SchemaCatalog, TableId}
+import graft.cdc.CdcOps
 import graft.streaming.CdcPipeline
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -47,10 +48,6 @@ object WireRehearsal {
     val nSegments = 4
     val rowsPerTable = 50L
 
-    val posKeyCol = concat_ws(":", col("log_file"),
-      lpad(col("log_pos").cast("string"), 10, "0"),
-      lpad(col("row_idx").cast("string"), 4, "0")).as("pos_key")
-
     // first element is an UNTIMED warmup duplicate: JVM/codegen/
     // classloader cost lands there, so the reported per-table ratio
     // compares steady-state plan-build times
@@ -87,6 +84,7 @@ object WireRehearsal {
         .withColumn("ts_us", lit(1700000000000000L) + col("id"))
         .withColumn("transaction_id", concat(lit("tx"), col("id").cast("string")))
         .withColumn("__pos", col("id") % nSegments) // 4 position segments
+        .withColumn("pos_key", CdcOps.posKey) // cached once, as startWire does
         .coalesce(4)
         .persist()
       seg.count() // materialize the cache before timing
@@ -95,7 +93,7 @@ object WireRehearsal {
         col("before")).otherwise(col("after"))
       val meta = Seq(col("message_type"), col("log_file"),
         col("log_pos"), col("row_idx"), col("ts_us"),
-        col("transaction_id"), posKeyCol)
+        col("transaction_id"), col("pos_key"))
 
       // ---- (a) STATIC plan build: segments × typedSlices → per-group
       // unions → repartition, exactly the sharded frames startWire

@@ -61,7 +61,10 @@ class SharedFramesSpec extends AnyFunSuite {
     assert(fa2.count() == 5, "second caller must get the FIRST computation")
     assert(fb.count() == 3, "a structurally different input plan is its own key")
     assert(SharedFrames.size == 2)
+    assert(SharedFrames.buildSeconds.contains("key-test"))
     SharedFrames.clear()
     assert(SharedFrames.size == 0)
+    assert(SharedFrames.buildSeconds.isEmpty,
+      "clear() must also reset the per-tag build seconds")
   }
 }

@@ -34,6 +34,133 @@ class CdcPipelineSpec extends AnyFunSuite {
     }
   }
 
+  // ---- Debezium wire fixtures ------------------------------------------
+
+  private val wireCluster = "dbzcluster"
+
+  /** A Debezium `source` block; `file` is JSON-encoded, so any binlog file
+    * name round-trips into `source.file` verbatim. */
+  private def src(pos: Long, tbl: String, file: String = "binlog.000001",
+      row: Int = 0) = {
+    val fileJson = org.json4s.jackson.JsonMethods.compact(org.json4s.JString(file))
+    s""""source":{"version":"2.6","connector":"mysql","name":"$wireCluster","ts_ms":1700000000000,"db":"inventory","table":"$tbl","server_id":1,"gtid":null,"file":$fileJson,"pos":$pos,"row":$row}"""
+  }
+
+  private def dataEvent(tbl: String, pos: Long, op: String, after: String,
+      before: String = "null", file: String = "binlog.000001", row: Int = 0) =
+    (s"$wireCluster.inventory.$tbl",
+      s"""{"payload":{"before":$before,"after":$after,${src(pos, tbl, file, row)},"op":"$op","ts_ms":1700000000000}}""")
+
+  private def schemaEvent(pos: Long, ddl: String, typ: String,
+      tbl: String = "customers", file: String = "binlog.000001") =
+    (wireCluster,
+      s"""{"payload":{${src(pos, tbl, file)},"ts_ms":1700000000000,"databaseName":"inventory","schemaName":null,"ddl":"$ddl","tableChanges":[{"type":"$typ","id":"\\"inventory\\".\\"$tbl\\""}]}}""")
+
+  /** One wire segment file (topic + Debezium JSON value; a null JSON is a
+    * delete tombstone). */
+  private def writeWireSeg(wireDir: String, events: Seq[(String, String)]): Unit = {
+    import spark.implicits._
+    events.toDF("topic", "json")
+      .select(col("topic"), lit(null).cast("binary").as("key"),
+        col("json").cast("binary").as("value"),
+        array().cast("array<struct<key:string,value:binary>>").as("headers"))
+      .coalesce(1).write.mode("append").parquet(wireDir)
+    Thread.sleep(100) // distinct mtimes → the file source preserves order
+  }
+
+  /** Segment 1: CREATE + two inserts, plus one row for a table the
+    * schema-change topic never created (quarantine path). */
+  private def wireSeg1 = Seq(
+    schemaEvent(100,
+      "CREATE TABLE `customers` (id INT PRIMARY KEY, name VARCHAR(64))",
+      "CREATE"),
+    dataEvent("customers", 200, "c", """{"id":"1","name":"bob"}"""),
+    dataEvent("customers", 300, "c", """{"id":"2","name":"amy"}"""),
+    dataEvent("orders", 350, "c", """{"id":"9"}"""))
+
+  /** Segment 2: a PRE-ALTER row, the ALTER, two post-ALTER rows, a
+    * Debezium delete tombstone (null value) and a corrupt record. */
+  private def wireSeg2 = Seq(
+    dataEvent("customers", 380, "c", """{"id":"4","name":"dan"}"""),
+    schemaEvent(400, "ALTER TABLE `customers` ADD email VARCHAR(128)",
+      "ALTER"),
+    dataEvent("customers", 500, "c",
+      """{"id":"3","name":"joe","email":"joe@x.io"}"""),
+    dataEvent("customers", 600, "u",
+      """{"id":"1","name":"bob","email":"bob@x.io"}""",
+      """{"id":"1","name":"bob","email":null}"""),
+    (s"$wireCluster.inventory.customers", null), // delete tombstone: dropped
+    (s"$wireCluster.inventory.customers", "{corrupt")) // quarantined
+
+  /** Segment 3: a DDL-only batch. */
+  private def wireSeg3 = Seq(schemaEvent(700,
+    "CREATE TABLE `orders` (id INT PRIMARY KEY)", "CREATE", "orders"))
+
+  // ---- crash matrix ------------------------------------------------------
+
+  /** One ingress path over a fixed three-segment input, run into `root`. */
+  private final class Ingress(val name: String, val write: String => Unit,
+      val run: String => org.apache.spark.sql.streaming.StreamingQuery)
+
+  private val replayIngress = new Ingress("start",
+    root => writeSegments(s"$root/in", 3),
+    root => CdcPipeline.start(spark, s"$root/in", s"$root/out", s"$root/ck", s"$root/st"))
+
+  private val wireIngress = new Ingress("startWire",
+    root => Seq(wireSeg1, wireSeg2, wireSeg3).foreach(writeWireSeg(s"$root/in", _)),
+    root => CdcPipeline.startWire(spark, s"$root/in", wireCluster, s"$root/out",
+      s"$root/ck", s"$root/st"))
+
+  /** The crash-free reference run of each path, shared by its phases. */
+  private val cleanRuns = scala.collection.mutable.Map.empty[String, String]
+  private def cleanRun(ing: Ingress): String = cleanRuns.getOrElseUpdate(ing.name, {
+    val root = Files.createTempDirectory(s"cdc-clean-${ing.name}").toString
+    ing.write(root)
+    ing.run(root).awaitTermination()
+    root
+  })
+
+  // reference failure_recovery_test.py:493+ kills the process inside a
+  // batch, then asserts the restart restores and re-applies cleanly. Each
+  // case crashes batch 1 once at one phase of the commit protocol (after
+  // DDL/typing, after staging, after the rename), requires that nothing
+  // of batch 1 was committed, restarts, and requires the result of a
+  // never-crashed run: same rows as a multiset (no dupes, no loss), and
+  // the same catalog snapshot (schema ids re-minted idempotently) and
+  // position.
+  for (ing <- Seq(replayIngress, wireIngress);
+       phase <- Seq("typed", "staged", "published")) {
+    test(s"crash matrix: ${ing.name} crash at '$phase' resumes exactly once") {
+      val clean = cleanRun(ing)
+      val root = Files.createTempDirectory(s"cdc-crash-${ing.name}-$phase").toString
+      ing.write(root)
+      val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
+      CdcPipeline.crashHook = { (batchId, at) =>
+        if (batchId == 1 && at == phase && crashed.compareAndSet(false, true))
+          throw new RuntimeException(s"injected crash at $phase")
+      }
+      try intercept[Exception] { ing.run(root).awaitTermination() }
+      finally CdcPipeline.crashHook = (_, _) => ()
+      assert(crashed.get, "the injected crash must have fired")
+      if (phase != "published")
+        assert(!Files.exists(java.nio.file.Paths.get(s"$root/out/batch=1")),
+          "a batch crashed before its rename must not be visible")
+      assert(CdcPipeline.loadState(s"$root/st").get.lastBatchId == 0L,
+        "the crashed batch must not have been committed")
+
+      ing.run(root).awaitTermination()
+      val got = spark.read.parquet(s"$root/out")
+      val want = spark.read.parquet(s"$clean/out")
+      assert(got.count() == want.count())
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+      val (st, ref) = (CdcPipeline.loadState(s"$root/st").get,
+        CdcPipeline.loadState(s"$clean/st").get)
+      assert(st.lastBatchId == ref.lastBatchId)
+      assert(st.catalogJson == ref.catalogJson)
+      assert(st.position == ref.position)
+    }
+  }
+
   test("streaming pipeline matches the batch pipeline and survives restart without dupes") {
     val root = Files.createTempDirectory("cdc-pipeline").toString
     val replayDir = s"$root/replay"
@@ -153,51 +280,6 @@ class CdcPipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("mid-DDL crash: replayed batch re-applies DDL idempotently, no output dupes") {
-    // reference failure_recovery_test.py:493+ kills the process between the
-    // schema-event apply and the state save, then asserts the restart
-    // restores and re-applies cleanly. Here: throw after the DDL branch of
-    // the FIRST unseen batch (catalog mutated in memory, nothing persisted),
-    // restart, and require identical results to a never-crashed run.
-    val root = Files.createTempDirectory("cdc-crash").toString
-    writeSegments(s"$root/replay", 3)
-    val cleanRoot = Files.createTempDirectory("cdc-crash-clean").toString
-    writeSegments(s"$cleanRoot/replay", 3)
-
-    // reference run without a crash
-    val qc = CdcPipeline.start(spark, s"$cleanRoot/replay", s"$cleanRoot/out",
-      s"$cleanRoot/ck", s"$cleanRoot/st")
-    qc.awaitTermination()
-
-    // crashing run: die mid-batch once, at the second batch
-    val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    CdcPipeline.afterDdlHook = { batchId =>
-      if (batchId == 1 && crashed.compareAndSet(false, true))
-        throw new RuntimeException("injected mid-DDL crash")
-    }
-    try {
-      val q1 = CdcPipeline.start(spark, s"$root/replay", s"$root/out", s"$root/ck", s"$root/st")
-      intercept[Exception] { q1.awaitTermination() }
-    } finally CdcPipeline.afterDdlHook = _ => ()
-    assert(crashed.get, "the injected crash must have fired")
-    // the crashed batch must not have been committed
-    assert(CdcPipeline.loadState(s"$root/st").get.lastBatchId == 0L)
-
-    // restart: batch 1 replays (DDLs re-applied on the restored catalog)
-    val q2 = CdcPipeline.start(spark, s"$root/replay", s"$root/out", s"$root/ck", s"$root/st")
-    q2.awaitTermination()
-
-    // output identical to the never-crashed run — no dupes, no loss
-    val got = spark.read.parquet(s"$root/out").drop("batch")
-    val want = spark.read.parquet(s"$cleanRoot/out").drop("batch")
-    assert(got.count() == want.count())
-    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
-    // catalog state identical too: schema ids minted during the replayed
-    // DDL apply equal the ones a crash-free run mints (idempotence)
-    assert(CdcPipeline.loadState(s"$root/st").get.catalogJson ==
-      CdcPipeline.loadState(s"$cleanRoot/st").get.catalogJson)
-  }
-
   test("kafka sink frame carries topic/key/value/headers in the kafka contract shape") {
     import org.apache.spark.sql.types._
     val env = CdcOps.pipeline(Tables.events(spark, sfDir))
@@ -286,24 +368,25 @@ class CdcPipelineSpec extends AnyFunSuite {
   }
 
   test("crash between snapshot writes: replay converges the materialized state") {
-    // crash mid-batch with materialization on (after the batch's DDL, so
-    // both the batch=<id> dir and the snap=<id> dir may or may not exist),
-    // restart, and require the final snapshot to equal the batch truth —
-    // the snap=<id> overwrite + read-strictly-below protocol must make
-    // the replay idempotent
+    // crash mid-batch with materialization on (after the rename and the
+    // snapshot write, before the state save, so both the batch=<id> dir
+    // and the snap=<id> dir already exist), restart, and require the
+    // final snapshot to equal the batch truth — the snap=<id> overwrite +
+    // read-strictly-below protocol must make the replay idempotent
     val root = Files.createTempDirectory("cdc-mat-crash").toString
     writeSegments(s"$root/replay", 3)
     val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    CdcPipeline.afterDdlHook = { batchId =>
-      if (batchId == 1 && crashed.compareAndSet(false, true))
+    CdcPipeline.crashHook = { (batchId, phase) =>
+      if (batchId == 1 && phase == "published" && crashed.compareAndSet(false, true))
         throw new RuntimeException("injected crash with materialization on")
     }
     try {
       val q1 = CdcPipeline.start(spark, s"$root/replay", s"$root/out",
         s"$root/ck", s"$root/st", materializeDir = Some(s"$root/mat"))
       intercept[Exception] { q1.awaitTermination() }
-    } finally CdcPipeline.afterDdlHook = _ => ()
+    } finally CdcPipeline.crashHook = (_, _) => ()
     assert(crashed.get)
+    assert(Files.exists(java.nio.file.Paths.get(s"$root/mat/snap=1")))
     CdcPipeline.start(spark, s"$root/replay", s"$root/out",
       s"$root/ck", s"$root/st", materializeDir = Some(s"$root/mat"))
       .awaitTermination()
@@ -449,44 +532,13 @@ class CdcPipelineSpec extends AnyFunSuite {
   }
 
   test("wire mode: interleaved Debezium data + schema-change events across a restart") {
-    import spark.implicits._
     val root = Files.createTempDirectory("cdc-wire").toString
     val wireDir = s"$root/wire"; val outDir = s"$root/out"
     val ckDir = s"$root/ck"; val stDir = s"$root/state"
-    val cluster = "dbzcluster"
+    def writeSeg(events: Seq[(String, String)]): Unit = writeWireSeg(wireDir, events)
 
-    def src(pos: Long, tbl: String) =
-      s""""source":{"version":"2.6","connector":"mysql","name":"$cluster","ts_ms":1700000000000,"db":"inventory","table":"$tbl","server_id":1,"gtid":null,"file":"binlog.000001","pos":$pos,"row":0}"""
-
-    def dataEvent(tbl: String, pos: Long, op: String, after: String,
-        before: String = "null") =
-      (s"$cluster.inventory.$tbl",
-        s"""{"payload":{"before":$before,"after":$after,${src(pos, tbl)},"op":"$op","ts_ms":1700000000000}}""")
-
-    def schemaEvent(pos: Long, ddl: String, typ: String,
-        tbl: String = "customers") =
-      (cluster,
-        s"""{"payload":{${src(pos, tbl)},"ts_ms":1700000000000,"databaseName":"inventory","schemaName":null,"ddl":"$ddl","tableChanges":[{"type":"$typ","id":"\\"inventory\\".\\"$tbl\\""}]}}""")
-
-    def writeSeg(events: Seq[(String, String)]): Unit = {
-      events.toDF("topic", "json")
-        .select(col("topic"), lit(null).cast("binary").as("key"),
-          col("json").cast("binary").as("value"),
-          array().cast("array<struct<key:string,value:binary>>").as("headers"))
-        .coalesce(1).write.mode("append").parquet(wireDir)
-      Thread.sleep(100) // distinct mtimes → the file source preserves order
-    }
-
-    // segment 1: CREATE + two inserts, plus one row for a table the
-    // schema-change topic never created (quarantine path)
-    writeSeg(Seq(
-      schemaEvent(100,
-        "CREATE TABLE `customers` (id INT PRIMARY KEY, name VARCHAR(64))",
-        "CREATE"),
-      dataEvent("customers", 200, "c", """{"id":"1","name":"bob"}"""),
-      dataEvent("customers", 300, "c", """{"id":"2","name":"amy"}"""),
-      dataEvent("orders", 350, "c", """{"id":"9"}""")))
-    CdcPipeline.startWire(spark, wireDir, cluster, outDir, ckDir, stDir)
+    writeSeg(wireSeg1)
+    CdcPipeline.startWire(spark, wireDir, wireCluster, outDir, ckDir, stDir)
       .awaitTermination()
     val b0 = spark.read.parquet(s"$outDir/batch=0")
     val cust0 = b0.filter(col("topic") === "inventory.customers")
@@ -505,18 +557,8 @@ class CdcPipelineSpec extends AnyFunSuite {
     // schema active at its OWN binlog position (T22b): the pos-380 row
     // stays version 1 without email even though the batch also carries
     // the ALTER.
-    writeSeg(Seq(
-      dataEvent("customers", 380, "c", """{"id":"4","name":"dan"}"""),
-      schemaEvent(400, "ALTER TABLE `customers` ADD email VARCHAR(128)",
-        "ALTER"),
-      dataEvent("customers", 500, "c",
-        """{"id":"3","name":"joe","email":"joe@x.io"}"""),
-      dataEvent("customers", 600, "u",
-        """{"id":"1","name":"bob","email":"bob@x.io"}""",
-        """{"id":"1","name":"bob","email":null}"""),
-      (s"$cluster.inventory.customers", null), // delete tombstone: dropped
-      (s"$cluster.inventory.customers", "{corrupt"))) // quarantined
-    CdcPipeline.startWire(spark, wireDir, cluster, outDir, ckDir, stDir)
+    writeSeg(wireSeg2)
+    CdcPipeline.startWire(spark, wireDir, wireCluster, outDir, ckDir, stDir)
       .awaitTermination()
     val b1all = spark.read.parquet(s"$outDir/batch=1")
     val b1 = b1all.filter(col("topic") === "inventory.customers")
@@ -540,13 +582,53 @@ class CdcPipelineSpec extends AnyFunSuite {
     // segment 3: a DDL-only batch — the sink contract still writes the
     // (empty) batch=<id> directory, and the position still advances off
     // the schema-change coordinates
-    writeSeg(Seq(schemaEvent(700,
-      "CREATE TABLE `orders` (id INT PRIMARY KEY)", "CREATE", "orders")))
-    CdcPipeline.startWire(spark, wireDir, cluster, outDir, ckDir, stDir)
+    writeSeg(wireSeg3)
+    CdcPipeline.startWire(spark, wireDir, wireCluster, outDir, ckDir, stDir)
       .awaitTermination()
     assert(Files.exists(java.nio.file.Paths.get(s"$outDir/batch=2")),
       "a DDL-only batch must still write its batch directory")
     val st2 = CdcPipeline.loadState(stDir).get
     assert(st2.lastBatchId == 2L && st2.position("log_pos") == "700")
+  }
+
+  test("wire pos_key: a row index past 9999 fails the batch and commits nothing") {
+    // Spark's lpad truncates: without the overflow guard, Debezium row
+    // 10000 would publish under row 1000's key and break the total order
+    val root = Files.createTempDirectory("cdc-wire-rowidx").toString
+    writeWireSeg(s"$root/wire", Seq(
+      schemaEvent(100, "CREATE TABLE `customers` (id INT PRIMARY KEY)", "CREATE"),
+      dataEvent("customers", 200, "c", """{"id":"1"}""", row = 1000),
+      dataEvent("customers", 200, "c", """{"id":"2"}""", row = 10000)))
+    val e = intercept[Exception] {
+      CdcPipeline.startWire(spark, s"$root/wire", wireCluster, s"$root/out",
+        s"$root/ck", s"$root/st").awaitTermination()
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString("\n")
+    assert(messages.contains("pos_key row_idx overflow"), messages)
+    assert(CdcPipeline.loadState(s"$root/st").isEmpty, "no state may be committed")
+    assert(!Files.exists(java.nio.file.Paths.get(s"$root/out/batch=0")),
+      "no rows may be published")
+  }
+
+  test("wire state mirror: a binlog file name with quote and backslash survives a restart") {
+    val root = Files.createTempDirectory("cdc-wire-escape").toString
+    val file = "bin\"log\\x.000001"
+    def run(): Unit = CdcPipeline.startWire(spark, s"$root/wire", wireCluster,
+      s"$root/out", s"$root/ck", s"$root/st").awaitTermination()
+    writeWireSeg(s"$root/wire", Seq(
+      schemaEvent(100, "CREATE TABLE `customers` (id INT PRIMARY KEY)", "CREATE",
+        file = file),
+      dataEvent("customers", 200, "c", """{"id":"1"}""", file = file)))
+    run()
+    assert(CdcPipeline.loadState(s"$root/st").get.position("log_file") == file)
+    writeWireSeg(s"$root/wire", Seq(
+      dataEvent("customers", 300, "c", """{"id":"2"}""", file = file)))
+    run() // restarts from the saved state
+    val st = CdcPipeline.loadState(s"$root/st").get
+    assert(st.lastBatchId == 1L && st.position("log_file") == file &&
+      st.position("log_pos") == "300")
+    assert(spark.read.parquet(s"$root/out").select("log_file").distinct()
+      .collect().map(_.getString(0)).toSeq == Seq(file))
   }
 }
